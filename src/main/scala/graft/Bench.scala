@@ -54,6 +54,13 @@ object Bench {
     * ratio criterion. */
   val CodegenHeadlineSamples: Int = 3
 
+  /** 0.1 ms resolution: full double precision only pads the contract line
+    * (scheduler noise is ±15-30%, so digits past 4 decimals carry nothing).
+    * Negatives are failure markers and round toward −∞, so a marker below
+    * 0.05 ms stays negative instead of reading as a 0.0 success. */
+  private[graft] def r4(d: Double): Double =
+    (if (d < 0) math.floor(d * 10000) else math.round(d * 10000).toDouble) / 10000.0
+
   /** One headline run's wall time plus its per-batch duration totals from
     * StreamingQueryProgress — recorded per sample in the artifact so a
     * contended run is diagnosable from the JSON alone (which component
@@ -223,7 +230,7 @@ object Bench {
     // per-batch Janino recompile the advancing-watermark literal forces,
     // see the block comment), so codegen must be the ONLY variable.
     // r15 ran it at shuffle_partitions = cpus, which mostly measured
-    // state-partition sizing, not codegen: the r16 CodegenLoop matrix
+    // state-partition sizing, not codegen: the r16 matrix (OPTIMIZATION_r16.md:145)
     // (warm, 26 batches) put 4→32 state partitions at ~+1.0 s/run
     // (32 state-store commits/batch: commitTimeMs 5-14 → 150-540 ms/run;
     // plus 2×32-task scheduling for ~3.6k rows) vs codegen on/off at
@@ -288,9 +295,6 @@ object Bench {
       // magnitude (negative) so the artifact shows time-to-exception
       (name, if (ok.nonEmpty) ok.min else vs.head)
     }
-    // 0.1 ms resolution: full double precision only pads the contract line
-    // (scheduler noise is ±15-30%, so digits past 4 decimals carry nothing)
-    def r4(d: Double): Double = math.round(d * 10000) / 10000.0
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     val failedNames = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.storage.EpochIndex
 
 /**
  * Corpus-hygiene operators a large-scale training-data pipeline needs beyond
@@ -785,8 +786,8 @@ object CorpusOps {
       ()
     }
 
-  /** Single-writer lease for the overlap-sketch lifecycle — [[graft
-    * .operators.Dedup.withIndexLease]] over a SIBLING `<path>__writer`
+  /** Single-writer lease for the overlap-sketch lifecycle —
+    * [[EpochIndex.withLease]] over a SIBLING `<path>__writer`
     * directory, because the sketch path itself is rewritten wholesale
     * (parquet overwrite deletes the dir, which would delete an in-dir
     * lease mid-hold). Turns a concurrent save/append — a silently LOST
@@ -794,9 +795,9 @@ object CorpusOps {
     * persisted index family. */
   private def withSketchLease[T](spark: org.apache.spark.sql.SparkSession,
       path: String, op: String)(body: => T): T = {
-    val fs = Dedup.indexFs(spark, path)
+    val fs = EpochIndex.fs(spark, path)
     val writerDir = s"${path}__writer"
-    try Dedup.withIndexLease(fs, writerDir, op)(body)
+    try EpochIndex.withLease(fs, writerDir, op)(body)
     finally {
       // the lease machinery leaves the (now empty) sibling dir behind;
       // a NON-recursive delete removes it only when empty, so a racing
@@ -1595,8 +1596,7 @@ object CorpusOps {
   }
 
   /** Forget a path's memoized format tag (for callers that delete or
-    * replace a temp index out-of-band — [[graft.operators.Dedup
-    * .forgetHashIndex]]'s twin). */
+    * replace a temp index out-of-band — [[EpochIndex.forget]]'s twin). */
   private[graft] def forgetBm25Stats(path: String): Unit = {
     bm25StatsFormats.remove(path); ()
   }
@@ -1705,8 +1705,8 @@ object CorpusOps {
   def saveBm25Stats(docs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val spark = docs.sparkSession
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "saveBm25Stats") {
+    val fs = EpochIndex.fs(spark, path)
+    EpochIndex.withLease(fs, path, "saveBm25Stats") {
       val e = freshBaseEpoch(fs, path)
       val (dft, meta) = bm25StatsOf(docs, idCol, textCol)
       dft.write.mode("overwrite").parquet(s"$path/terms/epoch=$e")
@@ -1735,8 +1735,8 @@ object CorpusOps {
       s"epoch must be >= 0 (got $epoch); negative ids are rebuild generations")
     val spark = batch.sparkSession
     requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "appendToBm25Stats") {
+    val fs = EpochIndex.fs(spark, path)
+    EpochIndex.withLease(fs, path, "appendToBm25Stats") {
       val cur = readBm25Manifest(fs, path).getOrElse(throw new IllegalStateException(
         s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))
       val (dft, meta) = bm25StatsOf(batch, idCol, textCol)
@@ -1775,7 +1775,7 @@ object CorpusOps {
   def loadBm25Stats(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Long, Double) = {
     requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
+    val fs = EpochIndex.fs(spark, path)
     val committed = readBm25Manifest(fs, path).getOrElse(
       throw new IllegalStateException(
         s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))
@@ -1832,8 +1832,8 @@ object CorpusOps {
   def compactBm25Stats(spark: org.apache.spark.sql.SparkSession,
       path: String): Int = {
     requireBm25Stats(spark, path)
-    val fs = Dedup.indexFs(spark, path)
-    Dedup.withIndexLease(fs, path, "compactBm25Stats") {
+    val fs = EpochIndex.fs(spark, path)
+    EpochIndex.withLease(fs, path, "compactBm25Stats") {
       val committed = readBm25Manifest(fs, path).getOrElse(
         throw new IllegalStateException(
           s"BM25 stats at $path have no manifest — build with saveBm25Stats first"))

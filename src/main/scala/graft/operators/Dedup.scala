@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.functions.hashFunctions._
+import graft.storage.EpochIndex
 
 /**
  * Deduplication operators for large text corpora. All operators are pure
@@ -219,44 +220,6 @@ object Dedup extends Logging {
   /** Live share count (tests). */
   private[graft] def lazyShareLive: Int =
     shareRegistry.synchronized(shareRegistry.size())
-
-  /**
-   * Run independent Spark actions concurrently (guide §2.6: actions are
-   * only sequential because driver code calls them sequentially). Used
-   * where one epoch/fit produces several independent outputs — the
-   * survivor write and the index admission of a streaming dedup epoch,
-   * the band/shingle/segment tables of one index build — whose small jobs
-   * otherwise serialize their scheduling tails. Inputs shared through
-   * [[lazyShare]]/`persist` stay safe: cache blocks are computed under
-   * block-level locking, so concurrent first readers do not corrupt, at
-   * worst duplicate, the materialization. The first work item runs on the
-   * calling thread (fresh threads inherit the caller's job group /
-   * description via Spark's inheritable thread locals); every item is
-   * awaited, the first failure is rethrown with the others suppressed.
-   */
-  private[graft] def concurrently(works: Seq[() => Unit]): Unit = {
-    if (works.lengthCompare(1) <= 0) { works.foreach(_()); return }
-    val errs = new java.util.concurrent.CopyOnWriteArrayList[Throwable]()
-    val threads = works.tail.map { w =>
-      val t = new Thread(() => {
-        try w() catch { case e: Throwable => errs.add(e); () }
-      }, "graft-concurrent-action")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    try works.head() catch { case e: Throwable => errs.add(0, e) }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) {
-      val first = errs.get(0)
-      (1 until errs.size()).foreach(i => first.addSuppressed(errs.get(i)))
-      throw first
-    }
-  }
-
-  /** Two-action sugar for [[concurrently]]. */
-  private[graft] def concurrently(a: => Unit, b: => Unit): Unit =
-    concurrently(Seq(() => a, () => b))
 
   /**
    * Spread a physically tiny input before CPU-heavy per-row map work
@@ -1079,6 +1042,13 @@ object Dedup extends Logging {
   private def hashesOf(df: DataFrame, keyCols: Seq[Column]): DataFrame =
     df.select(contentHash(keyCols, 0).as("h0"), contentHash(keyCols, 1).as("h1"))
 
+  /** The hash index's one table: `hashes/` with each row's 128-bit content
+    * hash (package-visible so replay tests can simulate a crashed attempt's
+    * partial admission through [[EpochIndex.admit]]). */
+  private[graft] def hashTables(df: DataFrame,
+      keyCols: Seq[Column]): Seq[(String, DataFrame)] =
+    Seq("hashes" -> hashesOf(df, keyCols).distinct())
+
   /**
    * Persist the 128-bit content-hash set of a corpus — two longs a row, no
    * content, so the stored index is ~16 bytes per corpus document — letting
@@ -1086,57 +1056,28 @@ object Dedup extends Logging {
    * ([[dedupAgainstHashIndex]]). This is the cross-run corner exact dedup
    * alone can't cover: a pipeline ingesting daily crawls must drop documents
    * already admitted LAST month without holding last month's corpus in the
-   * job. Layout: `hashes/epoch=<id>/` parquet — within a delta the files
-   * are flat (unlike the ANN indexes there is nothing to prune by: the
-   * anti-join always probes the whole hash set, and random 64-bit hash
-   * buckets would never be selective; AQE sizes the file count to the
-   * data), and the single `epoch` partition level exists for STREAMING
-   * admission ([[dedupStreamAgainstHashIndex]]): a replayed epoch must be
-   * able to exclude exactly its own previous (possibly partial) delta.
-   * Batch writes all land in `epoch=-1`. `params/` records the key columns
-   * for drift detection. Same 128-bit collision odds as [[exact]].
+   * job. Layout ([[EpochIndex]]): `hashes/epoch=<id>/` parquet — within a
+   * delta the files are flat (unlike the ANN indexes there is nothing to
+   * prune by: the anti-join always probes the whole hash set, and random
+   * 64-bit hash buckets would never be selective; AQE sizes the file count
+   * to the data). `params/` records the key columns for drift detection.
+   * Same 128-bit collision odds as [[exact]].
    */
   def saveHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit = {
-    val spark = df.sparkSession
-    withIndexLease(indexFs(spark, path), path, "saveHashIndex") {
-      hashesOf(df, keyCols).distinct()
-        .write.mode("overwrite").parquet(s"$path/hashes/epoch=-1")
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/hashes")
-      import spark.implicits._
-      val asked = keyCols.map(nameOf).mkString(",")
-      Seq(asked).toDF("key_cols")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      hashIndexParams.put(path, asked) // refresh: the path may be re-keyed
-    }
-    ()
-  }
-
-  /** Forget a path's memoized params (for callers that delete a temp
-    * index; a leaked entry is only a few bytes but never evicts). */
-  private[graft] def forgetHashIndex(path: String): Unit = {
-    hashIndexParams.remove(path); ()
+    import df.sparkSession.implicits._
+    EpochIndex.save(path, "saveHashIndex",
+      Seq(keyCols.map(nameOf).mkString(",")).toDF("key_cols"), hashTables(df, keyCols))
   }
 
   /** Load a persisted hash index: `(h0, h1, epoch)` — `epoch` is the
     * partition-directory column (-1 for all batch-written hashes). */
   def loadHashIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/hashes")
-
-  /** Per-path memo of the stored key-column description: the drift check
-    * runs on EVERY admission call (each micro-batch of a stream), and
-    * re-reading the one-row params file each time costs a file listing +
-    * read job. `saveHashIndex` refreshes the entry when a path is re-keyed
-    * in-process; an external rewrite of a live path is already undefined
-    * behavior for the hash files themselves. */
-  private val hashIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    EpochIndex.scan(spark, path, "hashes")
 
   private def requireKeyColsMatch(
       spark: org.apache.spark.sql.SparkSession, path: String,
       keyCols: Seq[Column]): Unit = {
-    val stored = hashIndexParams.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/params")
-        .select(col("key_cols")).head().getString(0))
+    val stored = EpochIndex.params(spark, path).getAs[String]("key_cols")
     val asked = keyCols.map(nameOf).mkString(",")
     if (stored != asked) throw new IllegalStateException(
       s"hash index at $path was built over key columns [$stored] but this " +
@@ -1180,9 +1121,7 @@ object Dedup extends Logging {
     requireKeyColsMatch(spark, path, keyCols)
     val hashed = df.withColumn("__h0", contentHash(keyCols, 0))
       .withColumn("__h1", contentHash(keyCols, 1))
-    // partition pruning drops the excluded epoch's files at listing time
-    val idx = excludeEpoch.foldLeft(loadHashIndex(spark, path))(
-      (i, e) => i.filter(col("epoch") =!= lit(e)))
+    val idx = EpochIndex.scan(spark, path, "hashes", excludeEpoch)
     // the bloom's job is to keep a CORPUS-scale index out of the anti-join
     // shuffle; when the index is small enough to broadcast/exchange
     // trivially (plan stats), skip the build (force it by passing
@@ -1206,274 +1145,35 @@ object Dedup extends Logging {
     * but stores dead weight. */
   def appendToHashIndex(df: DataFrame, keyCols: Seq[Column], path: String): Unit = {
     requireKeyColsMatch(df.sparkSession, path, keyCols)
-    withIndexLease(indexFs(df.sparkSession, path), path, "appendToHashIndex") {
-      hashesOf(df, keyCols).distinct()
-        .write.mode("append").parquet(s"$path/hashes/epoch=-1")
-    }
+    EpochIndex.append(df.sparkSession, path, "appendToHashIndex", hashTables(df, keyCols))
   }
 
   /**
-   * Continuous-ingestion form of [[dedupAgainstHashIndex]]: every
-   * micro-batch anti-joins the persisted index, survivors go to
-   * `writeBatch`, and (when `admit`) their hashes are written to the
-   * index's `epoch=<id>` partition BEFORE the next batch — so a text
-   * admitted in epoch N drops in epoch N+1. The cross-batch memory is the
-   * on-disk index itself, not a Spark state store: it survives restarts,
-   * is shared with batch jobs, and its size is 16 bytes per admitted
-   * document regardless of stream lifetime.
-   *
-   * Replay safety (foreachBatch is at-least-once): the anti-join EXCLUDES
-   * the current epoch's own partition, and the admission OVERWRITES it —
-   * so whether a crashed attempt admitted nothing, part, or all of its
-   * hashes, the retry probes exactly the pre-epoch index state, recomputes
-   * the identical survivor set, re-delivers it to `writeBatch`, and
-   * replaces the partial delta. `writeBatch` must still be idempotent on
-   * the epoch id (e.g. overwrite an epoch-keyed directory) because it may
-   * see the same survivors twice. Survivors are pinned with `persist` so
-   * `writeBatch` and the admission hash the SAME rows.
-   *
-   * One live stream per index: epoch ids restart per checkpoint, so two
-   * streams sharing a path would overwrite each other's epoch partitions.
-   * A long-lived stream accretes one partition directory per admitting
-   * epoch; periodically rebuilding with [[saveHashIndex]] (from the
-   * admitted corpus, e.g. between runs) compacts them into `epoch=-1`.
-   * Returns the configured writer; the caller picks trigger/checkpoint and
-   * starts it.
+   * Continuous-ingestion form of [[dedupAgainstHashIndex]] through
+   * [[EpochIndex.stream]] (which states the replay-retention contract):
+   * every micro-batch anti-joins the persisted index without its own
+   * epoch, survivors go to `writeBatch`, and their hashes are admitted to
+   * the index's `epoch=<id>` partition before the next batch — so a text
+   * admitted in epoch N drops in epoch N+1. The index costs 16 bytes per
+   * admitted document regardless of stream lifetime.
    */
   def dedupStreamAgainstHashIndex(
-      stream: DataFrame, keyCols: Seq[Column], path: String,
-      admit: Boolean = true)(
+      stream: DataFrame, keyCols: Seq[Column], path: String)(
       writeBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val fresh = dedupAgainstHashIndex(batch, keyCols, path,
-        excludeEpoch = Some(epochId)).persist()
-      try {
-        // the survivor write and the epoch admission are independent
-        // actions over the SAME persisted rows, and the replay contract
-        // above already covers every partial-completion interleaving
-        // (retry excludes + overwrites the epoch's delta) — overlap them
-        if (admit) concurrently(
-          writeBatch(fresh, epochId),
-          admitEpoch(fresh, keyCols, path, epochId))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
-
-  /** [[dedupStreamAgainstHashIndex]]'s admission step: OVERWRITE epoch
-    * `epochId`'s delta partition with `df`'s hashes (package-visible so
-    * replay tests can simulate a crashed attempt's partial admission). */
-  private[graft] def admitEpoch(df: DataFrame, keyCols: Seq[Column],
-      path: String, epochId: Long): Unit =
-    hashesOf(df, keyCols).distinct()
-      .write.mode("overwrite").parquet(s"$path/hashes/epoch=$epochId")
+    EpochIndex.stream(stream, path, (batch, epochId) =>
+      dedupAgainstHashIndex(batch, keyCols, path, excludeEpoch = Some(epochId)))(
+      hashTables(_, keyCols), writeBatch)
 
   /**
    * Merge a hash index's accreted `epoch=<id>` delta partitions into the
-   * single `epoch=-1` partition (dedup'ing hashes across epochs) — the
-   * in-place form of the "rebuild with [[saveHashIndex]]" compaction the
-   * admission doc describes, without rescanning any corpus text. Only run
-   * while no stream owns the index. Returns the number of partitions
-   * merged, 0 if already compact.
+   * single `epoch=-1` partition (dedup'ing hashes across epochs) without
+   * rescanning any corpus text. Only run while no stream owns the index.
+   * Returns the number of partitions merged, 0 if already compact.
    */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withIndexLease(fs, path, "compactHashIndex") {
-      recoverCompaction(fs, path, "hashes") // a prior crashed swap first
-      val live = new Path(s"$path/hashes")
-      val n = fs.listStatus(live)
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      if (n <= 1) 0
-      else {
-        swapCompacted(fs, path, "hashes", tmp =>
-          spark.read.parquet(live.toString).drop("epoch").distinct()
-            .write.mode("overwrite").parquet(tmp))
-        n
-      }
-    }
-  }
-
-  /** How old a lease file must be before a new writer may break it: a
-    * writer that died without cleanup must not brick its index forever,
-    * but a SLOW live compaction must not get its lease stolen mid-swap. */
-  private[operators] val IndexLeaseStaleMs: Long = 30L * 60 * 1000
-
-  /** Delete every `epoch=<id>` delta partition EXCEPT the `epoch=-1` base
-    * under `dir` — a fresh save to an already-used index path must start
-    * from scratch, not silently union stale deltas left by a previous
-    * streaming run into every subsequent load/probe. Every `saveXIndex`
-    * calls this (under the writer lease) after writing its new base. */
-  private[graft] def dropStaleEpochDeltas(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("epoch=") && n != "epoch=-1")
-        fs.delete(st.getPath, true)
-    }
-    ()
-  }
-
-  /** Best-effort single-writer lease over an index path. The compaction
-    * swap is crash-safe against a writer DYING, but two simultaneous
-    * writers (two jobs sharing an index path — append while compacting,
-    * two compactions) can interleave the checked renames into states no
-    * single-writer recovery contemplates. Every index mutation therefore
-    * takes `<path>/__lease` via create-exclusive first and fails LOUDLY
-    * (with the holder's tag in the message) if another writer holds it;
-    * a lease older than the stale threshold is treated as a dead
-    * writer's leftover and broken. While the body runs, a daemon
-    * HEARTBEAT thread re-touches the lease mtime every `staleMs / 3`, so
-    * a live writer outliving the threshold (a corpus-scale compaction
-    * can easily run past 30 min) keeps its lease fresh instead of having
-    * it silently broken — and its swap corrupted — by a concurrent
-    * writer. Best-effort by design: HDFS create-exclusive is atomic; on
-    * stores without atomic create the guard still refuses every
-    * OBSERVABLE overlap — its job is turning a silent corruption into a
-    * loud error, not distributed locking. */
-  private[graft] def withIndexLease[T](fs: org.apache.hadoop.fs.FileSystem,
-      path: String, op: String,
-      staleMs: Long = IndexLeaseStaleMs)(body: => T): T = {
-    import org.apache.hadoop.fs.Path
-    val lease = new Path(s"$path/__lease")
-    fs.mkdirs(new Path(path))
-    val holderTag = s"$op@${System.currentTimeMillis()}"
-    def tryAcquire(): Boolean =
-      try {
-        val out = fs.create(lease, false)
-        try out.write(holderTag.getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    var acquired = tryAcquire()
-    if (!acquired) {
-      val age =
-        try System.currentTimeMillis() - fs.getFileStatus(lease).getModificationTime
-        catch {
-          // holder released between our failed create and the stat: retry
-          case _: java.io.FileNotFoundException => Long.MaxValue
-        }
-      if (age >= staleMs) {
-        fs.delete(lease, false)
-        acquired = tryAcquire()
-      }
-      if (!acquired) {
-        val holder =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-            new java.io.DataInputStream(fs.open(lease))), "UTF-8")
-          catch { case _: Exception => "unknown" }
-        throw new IllegalStateException(
-          s"index at $path is being written by another job (lease held by " +
-            s"$holder). Concurrent index mutations are unsupported; if that " +
-            s"writer is dead, delete $lease (stale leases are broken " +
-            s"automatically after ${staleMs / 60000} min)")
-      }
-    }
-    val beat = new Thread(() => {
-      try {
-        while (!Thread.interrupted()) {
-          // staleMs/5, not /3: the slack between the last beat and the
-          // stale cutoff must absorb scheduler/GC starvation of this
-          // thread on a saturated host — 4/5 of the window of margin
-          // keeps a live lease fresh even when beats land late
-          Thread.sleep(math.max(50L, staleMs / 5))
-          // refresh the lease's mtime by REWRITING it (same holder tag):
-          // setTimes is a silent no-op on FileSystems that don't override
-          // it (object stores — S3 mtime is immutable), which would leave
-          // the live writer unprotected exactly where the guard matters.
-          // Rewriting our own held lease is safe (a thief only touches a
-          // STALE lease, and this write makes it fresh) and updates mtime
-          // on every store. Best-effort: any failure here means the guard
-          // is already degraded — never kill the beat or fail the body.
-          try {
-            val out = fs.create(lease, true)
-            out.write(holderTag.getBytes("UTF-8")); out.close()
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } catch { case _: InterruptedException => () }
-    }, s"graft-index-lease-heartbeat-$op")
-    beat.setDaemon(true)
-    beat.start()
-    try body finally {
-      // JOIN before deleting: a beat mid-rewrite would otherwise recreate
-      // the lease AFTER the delete, locking the index for the stale
-      // window against the next writer
-      beat.interrupt()
-      try beat.join(30000) catch { case _: InterruptedException => () }
-      fs.delete(lease, false)
-      ()
-    }
-  }
-
-  private[graft] def indexFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Crash-safe swap of a freshly-compacted table into `<path>/<table>` as
-    * its single `epoch=-1` partition. The live dir is never deleted before
-    * its replacement is in place: live is RENAMED aside to a backup, the
-    * compacted tmp is renamed in, and only then is the backup dropped —
-    * with every `fs.rename` boolean checked (a silently failed rename,
-    * e.g. cross-filesystem, must abort, not strand the index). A crash at
-    * any point leaves either the live table or the backup intact; the next
-    * compaction (or [[recoverCompaction]] directly) restores a missing
-    * live table from the backup before proceeding. */
-  private[operators] def swapCompacted(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String, writeTmp: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$path/$table")
-    val tmp = new Path(s"$path/${table}__compacting")
-    recoverCompaction(fs, path, table)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeTmp(tmp.toString)
-    val backup = new Path(s"$path/${table}__precompact")
-    if (!fs.rename(live, backup))
-      throw new java.io.IOException(
-        s"compaction of $live: swap-out rename to $backup failed; index untouched")
-    fs.mkdirs(live)
-    val in = new Path(live, "epoch=-1")
-    if (!fs.rename(tmp, in)) {
-      // roll back: the backup is still the complete pre-compaction index —
-      // and the rollback rename is itself checked, so the error never
-      // claims a restore that did not happen
-      fs.delete(live, true)
-      val restored = fs.rename(backup, live)
-      throw new java.io.IOException(
-        s"compaction of $live: swap-in rename of $tmp failed; " +
-          (if (restored) "index restored from backup"
-           else s"ROLLBACK RENAME ALSO FAILED — index is at $backup; " +
-             "the next compaction (recoverCompaction) will restore it"))
-    }
-    fs.delete(backup, true)
-    ()
-  }
-
-  /** Restore `<path>/<table>` from a crashed [[swapCompacted]]: a leftover
-    * `__precompact` backup with no live table — or only the EMPTY shell
-    * `mkdirs` creates between swap-out and swap-in — means the swap never
-    * completed: rename the backup back. A live table with content means
-    * the swap finished (a valid index dir always holds at least one
-    * `epoch=` child), so the backup is stale and dropped. */
-  private[operators] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, table: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$path/$table")
-    val backup = new Path(s"$path/${table}__precompact")
-    if (fs.exists(backup)) {
-      val liveHasData = fs.exists(live) && fs.listStatus(live).nonEmpty
-      if (liveHasData) fs.delete(backup, true)
-      else {
-        if (fs.exists(live)) fs.delete(live, true) // the empty mkdirs shell
-        if (!fs.rename(backup, live))
-          throw new java.io.IOException(
-            s"recovery rename of $backup to $live failed")
-      }
-    }
-    ()
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, "compactHashIndex", Seq("hashes"))
 
   // -------------------------------------------------------------------
   // Persisted MinHash index — the NEAR-DUP half of the incremental-dedup
@@ -1484,8 +1184,6 @@ object Dedup extends Logging {
 
   private final case class MinHashIndexParams(
       k: Int, numHashes: Int, bands: Int, seed: Long)
-  private val minHashIndexParams =
-    new ConcurrentHashMap[String, MinHashIndexParams]()
 
   private def shingleBase(df: DataFrame, idCol: String, textCol: String,
       k: Int, idAs: String): DataFrame =
@@ -1527,35 +1225,31 @@ object Dedup extends Logging {
       path: String, k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       seed: Long = 42L): Unit = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    val spark = docs.sparkSession
-    withIndexLease(indexFs(spark, path), path, "saveMinHashIndex") {
-      val base = lazyShare(shingleBase(docs, idCol, textCol, k, "doc_id"))
-      // independent outputs from one shared base — overlap the two writes
-      concurrently(
-        bandRows(base, "doc_id", numHashes, bands, seed)
-          .write.mode("overwrite").parquet(s"$path/bands/epoch=-1"),
-        hashedShingles(base, "doc_id")
-          .write.mode("overwrite").parquet(s"$path/shingles/epoch=-1"))
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/bands")
-      dropStaleEpochDeltas(indexFs(spark, path), s"$path/shingles")
-      import spark.implicits._
-      Seq((k, numHashes, bands, seed)).toDF("k", "num_hashes", "bands", "seed")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      minHashIndexParams.put(path, MinHashIndexParams(k, numHashes, bands, seed))
-    }
-    ()
+    import docs.sparkSession.implicits._
+    EpochIndex.save(path, "saveMinHashIndex",
+      Seq((k, numHashes, bands, seed)).toDF("k", "num_hashes", "bands", "seed"),
+      minHashTables(docs, idCol, textCol, MinHashIndexParams(k, numHashes, bands, seed)))
   }
 
   private def minHashParamsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): MinHashIndexParams =
-    minHashIndexParams.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/params").head()
-      MinHashIndexParams(r.getAs[Int]("k"), r.getAs[Int]("num_hashes"),
-        r.getAs[Int]("bands"), r.getAs[Long]("seed"))
-    })
+      path: String): MinHashIndexParams = {
+    val r = EpochIndex.params(spark, path)
+    MinHashIndexParams(r.getAs[Int]("k"), r.getAs[Int]("num_hashes"),
+      r.getAs[Int]("bands"), r.getAs[Long]("seed"))
+  }
 
-  private[graft] def forgetMinHashIndex(path: String): Unit = {
-    minHashIndexParams.remove(path); ()
+  /** The MinHash index's two tables, `bands` and `shingles`, from one
+    * shared shingle base (package-visible so replay tests can simulate a
+    * crashed attempt's partial admission through [[EpochIndex.admit]]). */
+  private[graft] def minHashTables(df: DataFrame, idCol: String, textCol: String,
+      path: String): Seq[(String, DataFrame)] =
+    minHashTables(df, idCol, textCol, minHashParamsOf(df.sparkSession, path))
+
+  private def minHashTables(df: DataFrame, idCol: String, textCol: String,
+      p: MinHashIndexParams): Seq[(String, DataFrame)] = {
+    val base = lazyShare(shingleBase(df, idCol, textCol, p.k, "doc_id"))
+    Seq("bands" -> bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
+      "shingles" -> hashedShingles(base, "doc_id"))
   }
 
   /**
@@ -1608,15 +1302,11 @@ object Dedup extends Logging {
     val bBand = dropHotKeys(
       bandRows(base, "doc_id", p.numHashes, p.bands, p.seed),
       Seq("band", "bucket"), maxBatchBucket, "minHashIndex")
-    def epochScan(table: String): DataFrame = {
-      val df = spark.read.parquet(s"$path/$table")
-      excludeEpoch.foldLeft(df)((d, e) => d.filter(col("epoch") =!= lit(e)))
-    }
-    val iBand = epochScan("bands").select(
+    val iBand = EpochIndex.scan(spark, path, "bands", excludeEpoch).select(
       col("doc_id").as("idx_id"), col("band"), col("bucket"))
     val cand = iBand.join(broadcast(bBand), Seq("band", "bucket"))
       .select(col("doc_id"), col("idx_id")).distinct()
-    val iSh = epochScan("shingles").select(
+    val iSh = EpochIndex.scan(spark, path, "shingles", excludeEpoch).select(
       col("doc_id").as("idx_id"), col("hs").as("idx_hs"))
     iSh.join(broadcast(cand.join(hashedShingles(base, "doc_id"), Seq("doc_id"))),
         Seq("idx_id"))
@@ -1649,55 +1339,27 @@ object Dedup extends Logging {
     * THOSE rows here. */
   def appendToMinHashIndex(batch: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
-    val p = minHashParamsOf(batch.sparkSession, path)
-    withIndexLease(indexFs(batch.sparkSession, path), path, "appendToMinHashIndex") {
-      val base = lazyShare(shingleBase(batch, idCol, textCol, p.k, "doc_id"))
-      concurrently(
-        bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
-          .write.mode("append").parquet(s"$path/bands/epoch=-1"),
-        hashedShingles(base, "doc_id")
-          .write.mode("append").parquet(s"$path/shingles/epoch=-1"))
-    }
+    EpochIndex.append(batch.sparkSession, path, "appendToMinHashIndex",
+      minHashTables(batch, idCol, textCol, path))
   }
 
   /**
-   * Continuous-ingestion form of [[dedupAgainstMinHashIndex]], with the
-   * same replay contract as [[dedupStreamAgainstHashIndex]]: every
-   * micro-batch probes the index EXCLUDING its own epoch's delta,
+   * Continuous-ingestion form of [[dedupAgainstMinHashIndex]] through
+   * [[EpochIndex.stream]] (which states the replay-retention contract):
+   * every micro-batch probes the index without its own epoch's delta,
    * survivors go to `writeBatch` (which must be idempotent on the epoch
-   * id), and admission OVERWRITES the epoch's partitions — so an
-   * at-least-once retry recomputes the identical survivor set. One live
-   * stream per index path.
+   * id), and their bands and shingles are admitted as the epoch's delta.
+   * One live stream per index path.
    */
   def dedupStreamAgainstMinHashIndex(
       stream: DataFrame, idCol: String, textCol: String, path: String,
-      threshold: Double = 0.5, admit: Boolean = true)(
+      threshold: Double = 0.5)(
       writeBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val fresh = dedupAgainstMinHashIndex(batch, idCol, textCol, path,
-        threshold, excludeEpoch = Some(epochId)).persist()
-      try {
-        // overlap write + admission ([[dedupStreamAgainstHashIndex]]'s
-        // rationale): independent actions, replay-contract-covered
-        if (admit) concurrently(
-          writeBatch(fresh, epochId),
-          admitMinHashEpoch(fresh, idCol, textCol, path, epochId))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
-
-  private[graft] def admitMinHashEpoch(df: DataFrame, idCol: String,
-      textCol: String, path: String, epochId: Long): Unit = {
-    val p = minHashParamsOf(df.sparkSession, path)
-    val base = lazyShare(shingleBase(df, idCol, textCol, p.k, "doc_id"))
-    // independent outputs from one shared base — overlap the two writes
-    concurrently(
-      bandRows(base, "doc_id", p.numHashes, p.bands, p.seed)
-        .write.mode("overwrite").parquet(s"$path/bands/epoch=$epochId"),
-      hashedShingles(base, "doc_id")
-        .write.mode("overwrite").parquet(s"$path/shingles/epoch=$epochId"))
-  }
+    EpochIndex.stream(stream, path, (batch, epochId) =>
+      dedupAgainstMinHashIndex(batch, idCol, textCol, path, threshold,
+        excludeEpoch = Some(epochId)))(
+      minHashTables(_, idCol, textCol, path), writeBatch)
 
   /**
    * Fail loudly when the persisted MinHash index no longer matches the
@@ -1716,7 +1378,7 @@ object Dedup extends Logging {
         coalesce(bit_xor(xxhash64(col(c))), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    val (ic, ih) = fp(spark.read.parquet(s"$path/shingles"), "doc_id")
+    val (ic, ih) = fp(EpochIndex.scan(spark, path, "shingles"), "doc_id")
     val (cc, ch) = fp(shingleBase(docs, idCol, textCol, p.k, "doc_id"), "doc_id")
     if (ic != cc || ih != ch) throw new IllegalStateException(
       s"MinHash index at $path is stale: it covers $ic documents " +
@@ -1734,36 +1396,14 @@ object Dedup extends Logging {
    * the index was already compact.
    */
   def compactMinHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withIndexLease(fs, path, "compactMinHashIndex") {
-      // restore either table from a prior crashed swap before counting epochs
-      Seq("bands", "shingles").foreach(recoverCompaction(fs, path, _))
-      def epochDirs(table: String): Array[Path] =
-        fs.listStatus(new Path(s"$path/$table"))
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-          .map(_.getPath)
-      val n = epochDirs("bands").length
-      if (n <= 1 && epochDirs("shingles").length <= 1) 0
-      else {
-        // bands: full-row distinct; shingles: one row per doc — a doc
-        // admitted into more than one epoch (double append, or a crashed
-        // stream re-admitted under a new epoch id) must not keep duplicate
-        // rows that would inflate minHashIndexMatches counts forever
-        Seq("bands", "shingles").foreach { table =>
-          swapCompacted(fs, path, table, { tmp =>
-            val merged = spark.read.parquet(s"$path/$table").drop("epoch")
-            val deduped =
-              if (table == "shingles") merged.dropDuplicates("doc_id")
-              else merged.distinct()
-            deduped.write.mode("overwrite").parquet(tmp)
-          })
-        }
-        n
-      }
-    }
-  }
+      path: String): Int =
+    // bands: full-row distinct; shingles: one row per doc — a doc admitted
+    // into more than one epoch (double append, or a crashed stream
+    // re-admitted under a new epoch id) must not keep duplicate rows that
+    // would inflate minHashIndexMatches counts forever
+    EpochIndex.compact(spark, path, "compactMinHashIndex", Seq("bands", "shingles"),
+      (table, merged) =>
+        if (table == "shingles") merged.dropDuplicates("doc_id") else merged.distinct())
 
   /**
    * DuckDB twin of [[dedupAgainstMinHashIndex]]'s survivor set over

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.storage.EpochIndex
+
 /**
  * Exact edit-distance (Levenshtein) joins — fuzzy record linkage, the
  * training-data-cleaning companion to [[Dedup]]'s set-similarity family:
@@ -280,39 +282,30 @@ object Fuzzy {
   // Persisted segment index — the restart-surviving form of [[fuzzyFit]]:
   // a streaming linkage job (or a fleet of batch jobs) probes a catalog
   // fitted ONCE and saved, instead of re-segmenting the catalog on every
-  // driver start. Same storage conventions as [[Dedup.saveHashIndex]]:
-  // epoch-partitioned tables (batch writes land in `epoch=-1`; streaming
-  // admission owns `epoch=<id>` so a replayed epoch can overwrite exactly
-  // its own delta), `params/` for probe-compatibility validation, every
-  // mutation under the single-writer lease, compaction crash-safe via the
-  // checked rename swap. Reference precedent: checkpointed source
-  // recovery (EventHubsSource.scala:118-175) — fitted state must outlive
-  // the driver.
+  // driver start. Storage (epoch partitions, params, writer lease,
+  // crash-safe compaction) is [[EpochIndex]]'s. Reference precedent:
+  // checkpointed source recovery (EventHubsSource.scala:118-175) — fitted
+  // state must outlive the driver.
   // -------------------------------------------------------------------
 
-  private val fuzzyIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+  private val IndexTables = Seq("segments", "shorts", "ids")
 
   private def fuzzyParamsOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Int, Int) =
-    fuzzyIndexParams.computeIfAbsent(path, _ => {
-      val r = spark.read.parquet(s"$path/params").head()
-      (r.getAs[Int]("max_dist"), r.getAs[Int]("max_segment_df"))
-    })
-
-  private[graft] def forgetFuzzyIndex(path: String): Unit = {
-    fuzzyIndexParams.remove(path); ()
+      path: String): (Int, Int) = {
+    val r = EpochIndex.params(spark, path)
+    (r.getAs[Int]("max_dist"), r.getAs[Int]("max_segment_df"))
   }
 
-  /** One catalog slice's three index tables, written under `epochDir`.
-    * The `maxSegmentDf` hot-segment guard applies PER WRITE (each write
-    * sees only its own slice's distinct keys): a boilerplate segment can
-    * exceed the cap only across appends, where the candidate cost it
-    * guards against is already split across delta files. Ids are written
-    * distinct so a double-saved row cannot duplicate output pairs. */
-  private def writeIndexTables(catalog: DataFrame, idCol: String,
-      keyCol: String, maxDist: Int, maxSegmentDf: Int, path: String,
-      epochDir: String, mode: String): Unit = {
+  /** Hand one catalog slice's three index tables (`segments`, `shorts`,
+    * `ids`) to `write`, then release their shared key set. The
+    * `maxSegmentDf` hot-segment guard applies PER WRITE (each write sees
+    * only its own slice's distinct keys): a boilerplate segment can exceed
+    * the cap only across appends, where the candidate cost it guards
+    * against is already split across delta files. Ids are written distinct
+    * so a double-saved row cannot duplicate output pairs. */
+  private def withIndexTables(catalog: DataFrame, idCol: String,
+      keyCol: String, maxDist: Int, maxSegmentDf: Int)(
+      write: Seq[(String, DataFrame)] => Unit): Unit = {
     val ids = catalog
       .select(col(idCol).as("__lid"), col(keyCol).as("__lkey"))
       .filter(col("__lid").isNotNull && col("__lkey").isNotNull)
@@ -320,14 +313,20 @@ object Fuzzy {
     val keys = Dedup.lazyShare(ids.select(col("__lkey")).distinct())
     try {
       val (segIdx, shortIdx) = indexFrames(keys, maxDist, maxSegmentDf)
-      // three independent tables of one slice — overlap the writes (the
-      // first shared-`keys` reader materializes the cache under block
-      // locking; the others read it)
-      Dedup.concurrently(Seq(
-        () => segIdx.write.mode(mode).parquet(s"$path/segments/$epochDir"),
-        () => shortIdx.write.mode(mode).parquet(s"$path/shorts/$epochDir"),
-        () => ids.write.mode(mode).parquet(s"$path/ids/$epochDir")))
+      // the tables are written concurrently: the first shared-`keys`
+      // reader materializes the cache under block locking, the others
+      // read it
+      write(IndexTables.zip(Seq(segIdx, shortIdx, ids)))
     } finally { keys.unpersist(); () }
+  }
+
+  /** [[withIndexTables]] at the parameters stored for the index at `path`
+    * (package-visible so replay tests can simulate a crashed attempt's
+    * partial admission through [[EpochIndex.admit]]). */
+  private[graft] def withIndexTables(catalog: DataFrame, idCol: String,
+      keyCol: String, path: String)(write: Seq[(String, DataFrame)] => Unit): Unit = {
+    val (maxDist, maxSegmentDf) = fuzzyParamsOf(catalog.sparkSession, path)
+    withIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf)(write)
   }
 
   /** Persist the catalog's fitted segment index — [[fuzzyFit]] that
@@ -339,18 +338,10 @@ object Fuzzy {
   def saveFuzzyIndex(catalog: DataFrame, idCol: String, keyCol: String,
       maxDist: Int, path: String, maxSegmentDf: Int = Int.MaxValue): Unit = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val spark = catalog.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveFuzzyIndex") {
-      writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-        "epoch=-1", "overwrite")
-      Seq("segments", "shorts", "ids").foreach(t =>
-        Dedup.dropStaleEpochDeltas(Dedup.indexFs(spark, path), s"$path/$t"))
-      import spark.implicits._
-      Seq((maxDist, maxSegmentDf)).toDF("max_dist", "max_segment_df")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      fuzzyIndexParams.put(path, (maxDist, maxSegmentDf))
-    }
-    ()
+    import catalog.sparkSession.implicits._
+    withIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf)(
+      EpochIndex.save(path, "saveFuzzyIndex",
+        Seq((maxDist, maxSegmentDf)).toDF("max_dist", "max_segment_df"), _))
   }
 
   /** Load a persisted index into a [[FuzzyFitted]] — the same probe state
@@ -360,7 +351,7 @@ object Fuzzy {
   def loadFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): FuzzyFitted = {
     val (maxDist, _) = fuzzyParamsOf(spark, path)
-    def t(name: String) = spark.read.parquet(s"$path/$name").drop("epoch")
+    def t(name: String) = EpochIndex.scan(spark, path, name).drop("epoch")
     // ids dedup ACROSS writes (each write is distinct only within its own
     // slice): a key re-admitted by append/epoch-replay must not duplicate
     // output pairs. Segment/short duplicates are already harmless — the
@@ -376,60 +367,20 @@ object Fuzzy {
     * dedup before the verify) and its ids union; [[compactFuzzyIndex]]
     * collapses the storage. Probing a loaded index after an append equals
     * probing a fresh [[saveFuzzyIndex]] of the whole catalog, up to the
-    * per-write `maxSegmentDf` note on [[writeIndexTables]]. */
+    * per-write `maxSegmentDf` note on [[withIndexTables]]. */
   def appendToFuzzyIndex(catalog: DataFrame, idCol: String, keyCol: String,
-      path: String): Unit = {
-    val spark = catalog.sparkSession
-    val (maxDist, maxSegmentDf) = fuzzyParamsOf(spark, path)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path,
-        "appendToFuzzyIndex") {
-      writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-        "epoch=-1", "append")
-    }
-  }
-
-  /** Streaming admission ([[Dedup.admitEpoch]]'s contract): OVERWRITE
-    * epoch `epochId`'s delta partitions with this slice's index rows, so
-    * an at-least-once replay replaces its own possibly-partial delta
-    * instead of double-appending it. */
-  private[graft] def admitFuzzyEpoch(catalog: DataFrame, idCol: String,
-      keyCol: String, path: String, epochId: Long): Unit = {
-    val spark = catalog.sparkSession
-    val (maxDist, maxSegmentDf) = fuzzyParamsOf(spark, path)
-    writeIndexTables(catalog, idCol, keyCol, maxDist, maxSegmentDf, path,
-      s"epoch=$epochId", "overwrite")
-  }
+      path: String): Unit =
+    withIndexTables(catalog, idCol, keyCol, path)(
+      EpochIndex.append(catalog.sparkSession, path, "appendToFuzzyIndex", _))
 
   /** Merge accreted `epoch=<id>` deltas (and append erosion) into the
     * single `epoch=-1` partition per table — full-row distinct, so
-    * double-admitted keys/ids collapse to one copy. Crash-safe via
-    * [[Dedup.swapCompacted]]; only run while no stream owns the index.
-    * Returns the number of epoch partitions merged (max across tables),
-    * 0 if already compact. */
+    * double-admitted keys/ids collapse to one copy. Only run while no
+    * stream owns the index. Returns the number of epoch partitions merged
+    * (max across tables), 0 if already compact. */
   def compactFuzzyIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tables = Seq("segments", "shorts", "ids")
-    Dedup.withIndexLease(fs, path, "compactFuzzyIndex") {
-      tables.foreach(Dedup.recoverCompaction(fs, path, _))
-      def epochCount(table: String): Int =
-        fs.listStatus(new Path(s"$path/$table"))
-          .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      val n = tables.map(epochCount).max
-      if (n <= 1) 0
-      else {
-        tables.foreach { table =>
-          Dedup.swapCompacted(fs, path, table, { tmp =>
-            spark.read.parquet(s"$path/$table").drop("epoch").distinct()
-              .write.mode("overwrite").parquet(tmp)
-          })
-        }
-        n
-      }
-    }
-  }
+      path: String): Int =
+    EpochIndex.compact(spark, path, "compactFuzzyIndex", IndexTables)
 
   /** [[graft.streaming.StreamOps.fuzzyLinkStream]] through a PERSISTED
     * index: the fitted catalog state is loaded (not refit) — a driver

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.control.NonFatal
 
+import graft.storage.EpochIndex
+
 /**
  * Multimodal column handling: media content is an opaque `binary` column plus
  * a typed metadata struct; decode / feature-extract / frame-sample run as
@@ -315,22 +317,19 @@ object Multimodal {
   // admitted in past runs, without holding the past corpus in the job.
   // The stored index is (media_id, phash) — 16 bytes a row, no content;
   // banding is computed AT PROBE TIME from the stored hash (cheap bit
-  // ops on the scan), so the on-disk layout stays minimal. Same storage
-  // conventions: epoch partitions (batch -> epoch=-1, streaming
-  // admission overwrites its own epoch), params validation, writer
-  // lease, crash-safe compaction.
+  // ops on the scan), so the on-disk layout stays minimal. Storage
+  // (epoch partitions, params, writer lease, compaction) is EpochIndex's.
   // -------------------------------------------------------------------
 
-  private val phashIndexParams =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
   private def phashParamsOf(spark: SparkSession, path: String): Int =
-    phashIndexParams.computeIfAbsent(path, _ =>
-      spark.read.parquet(s"$path/params").head().getAs[Int]("max_hamming"))
+    EpochIndex.params(spark, path).getAs[Int]("max_hamming")
 
-  private[graft] def forgetPhashIndex(path: String): Unit = {
-    phashIndexParams.remove(path); ()
-  }
+  /** The phash index's one table, `hashes/` of (media_id, phash)
+    * (package-visible so replay tests can simulate a crashed attempt's
+    * partial admission through [[EpochIndex.admit]]). */
+  private[graft] def phashTables(media: Dataset[MediaRow],
+      codec: MediaCodec = StubCodec): Seq[(String, DataFrame)] =
+    Seq("hashes" -> perceptualHash(media, codec))
 
   /** Persist the corpus's perceptual hashes for incremental dedup
     * ([[dedupAgainstPhashIndex]]). `params/` records `maxHamming` — the
@@ -340,17 +339,9 @@ object Multimodal {
       maxHamming: Int = 4, codec: MediaCodec = StubCodec): Unit = {
     require(maxHamming >= 0 && maxHamming < 32,
       s"maxHamming $maxHamming out of range")
-    val spark = media.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "savePhashIndex") {
-      perceptualHash(media, codec)
-        .write.mode("overwrite").parquet(s"$path/hashes/epoch=-1")
-      Dedup.dropStaleEpochDeltas(Dedup.indexFs(spark, path), s"$path/hashes")
-      import spark.implicits._
-      Seq(maxHamming).toDF("max_hamming")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-      phashIndexParams.put(path, maxHamming)
-    }
-    ()
+    import media.sparkSession.implicits._
+    EpochIndex.save(path, "savePhashIndex", Seq(maxHamming).toDF("max_hamming"),
+      phashTables(media, codec))
   }
 
   /** Admit a media delta: append its hashes to `epoch=-1` under the
@@ -361,19 +352,8 @@ object Multimodal {
       codec: MediaCodec = StubCodec): Unit = {
     val spark = media.sparkSession
     phashParamsOf(spark, path) // params must exist (fail loudly otherwise)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path,
-        "appendToPhashIndex") {
-      perceptualHash(media, codec)
-        .write.mode("append").parquet(s"$path/hashes/epoch=-1")
-    }
+    EpochIndex.append(spark, path, "appendToPhashIndex", phashTables(media, codec))
   }
-
-  /** Streaming admission ([[Dedup.admitEpoch]]'s contract): OVERWRITE
-    * epoch `epochId`'s delta with this slice's hashes. */
-  private[graft] def admitPhashEpoch(media: Dataset[MediaRow], path: String,
-      epochId: Long, codec: MediaCodec = StubCodec): Unit =
-    perceptualHash(media, codec)
-      .write.mode("overwrite").parquet(s"$path/hashes/epoch=$epochId")
 
   /** Per-batch-media matches against the persisted index:
     * (media_id, n_index_matched, min_hamming) for every batch row with at
@@ -394,11 +374,8 @@ object Multimodal {
     val bBand = bHash.select(col("media_id"),
         posexplode(array(Dedup.hammingChunks(col("phash"), maxHamming): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-    val idx0 = spark.read.parquet(s"$path/hashes")
-    val idx = excludeEpoch.foldLeft(idx0)(
-      (i, e) => i.filter(col("epoch") =!= lit(e)))
-    val iBand = idx.select(col("media_id").as("idx_id"),
-        col("phash").as("idx_phash"),
+    val iBand = EpochIndex.scan(spark, path, "hashes", excludeEpoch)
+      .select(col("media_id").as("idx_id"), col("phash").as("idx_phash"),
         posexplode(array(Dedup.hammingChunks(col("phash"), maxHamming): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
     iBand.join(broadcast(bBand), Seq("band", "chunk"))
@@ -428,52 +405,25 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** Continuous-ingestion form, with [[Dedup.dedupStreamAgainstHashIndex]]'s
-    * replay contract verbatim: every micro-batch probes the index
-    * EXCLUDING its own epoch's delta, survivors go to `writeBatch`
-    * (idempotent on the epoch id), and admission OVERWRITES the epoch's
-    * partition — an at-least-once retry recomputes the identical survivor
-    * set. One live stream per index path. */
+  /** Continuous-ingestion form through [[EpochIndex.stream]] (which states
+    * the replay-retention contract): every micro-batch probes the index
+    * without its own epoch's delta, survivors go to `writeBatch`
+    * (idempotent on the epoch id), and their hashes are admitted as the
+    * epoch's delta. One live stream per index path. */
   def dedupStreamAgainstPhashIndex(stream: DataFrame, path: String,
-      codec: MediaCodec = StubCodec, admit: Boolean = true)(
+      codec: MediaCodec = StubCodec)(
       writeBatch: (Dataset[MediaRow], Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
+    EpochIndex.stream(stream, path, (batch, epochId) => {
       import batch.sparkSession.implicits._
-      val fresh = dedupAgainstPhashIndex(batch.as[MediaRow], path, codec,
-        excludeEpoch = Some(epochId)).persist()
-      try {
-        // overlap write + admission ([[Dedup.dedupStreamAgainstHashIndex]]'s
-        // rationale): independent actions, replay-contract-covered
-        if (admit) Dedup.concurrently(
-          writeBatch(fresh, epochId),
-          admitPhashEpoch(fresh, path, epochId, codec))
-        else writeBatch(fresh, epochId)
-      } finally { fresh.unpersist(); () }
-    }
+      dedupAgainstPhashIndex(batch.as[MediaRow], path, codec, excludeEpoch = Some(epochId))
+    })(phashTables(_, codec), writeBatch)
 
   /** Merge accreted epoch deltas into `epoch=-1`, dropping duplicate
-    * (media_id, phash) rows — crash-safe via [[Dedup.swapCompacted]];
-    * only run while no stream owns the index. Returns partitions merged,
-    * 0 if already compact. */
-  def compactPhashIndex(spark: SparkSession, path: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Dedup.withIndexLease(fs, path, "compactPhashIndex") {
-      Dedup.recoverCompaction(fs, path, "hashes")
-      val n = fs.listStatus(new Path(s"$path/hashes"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      if (n <= 1) 0
-      else {
-        Dedup.swapCompacted(fs, path, "hashes", { tmp =>
-          spark.read.parquet(s"$path/hashes").drop("epoch").distinct()
-            .write.mode("overwrite").parquet(tmp)
-        })
-        n
-      }
-    }
-  }
+    * (media_id, phash) rows; only run while no stream owns the index.
+    * Returns partitions merged, 0 if already compact. */
+  def compactPhashIndex(spark: SparkSession, path: String): Int =
+    EpochIndex.compact(spark, path, "compactPhashIndex", Seq("hashes"))
 
   /** Build a MediaRow table from the documents corpus (text bytes standing in
     * for media payloads — deterministic, keeps the pipeline testable). */

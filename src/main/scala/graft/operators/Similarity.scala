@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.hashFunctions._
+import graft.storage.EpochIndex
 
 /**
  * Approximate-nearest-neighbor search over an embedding column.
@@ -338,9 +339,9 @@ object Similarity extends org.apache.spark.internal.Logging {
   def saveLshIndex(index: DataFrame, numBits: Int, seed: Long, path: String,
       int8: Boolean = false): Unit = {
     val spark = index.sparkSession
-    // single-writer lease (Dedup.withIndexLease contract): concurrent
+    // single-writer lease (EpochIndex.withLease contract): concurrent
     // save/append/compact on one index path fail loudly, not corrupt
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveLshIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "saveLshIndex") {
       // cluster each bucket into one task before partitionBy: otherwise every
       // input partition emits a file per bucket it touches (N x 2^bits small
       // files), and probe-time file listing/opens dominate the scan it saved
@@ -415,7 +416,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     // int8 index would mix schemas inside the bucket files
     val int8 = params.columns.contains("int8") &&
       params.select(col("int8")).head().getBoolean(0)
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "appendToLshIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "appendToLshIndex") {
       storageForm(lshIndex(newVecs, idCol, vecCol, p.getInt(0), p.getLong(1)), int8)
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$path/buckets")
@@ -480,7 +481,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       index: DataFrame, cents: Array[(Int, Array[Double])], path: String,
       int8: Boolean = false): Unit = {
     val spark = index.sparkSession
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "saveIvfIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "saveIvfIndex") {
       // one file per cell (see saveLshIndex): probe-time listing cost stays
       // proportional to probed cells, not input partitioning
       ivfStorageForm(index, int8).repartition(col("cell"))
@@ -591,7 +592,7 @@ object Similarity extends org.apache.spark.internal.Logging {
       .sortBy(_._1)
     // schema-detect the persisted storage form so deltas match it
     val int8 = spark.read.parquet(s"$path/assignments").columns.contains("q")
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "appendToIvfIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "appendToIvfIndex") {
       ivfStorageForm(
           newVecs.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
             .withColumn("cell", best_centroid(col("v"), cents.map(_._2))), int8)
@@ -620,7 +621,7 @@ object Similarity extends org.apache.spark.internal.Logging {
    */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerBucket: Int = 1): Int =
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "compactLshIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "compactLshIndex") {
       compactPartitionedTable(spark, s"$path/buckets", "bucket", maxFilesPerBucket)
     }
 
@@ -628,7 +629,7 @@ object Similarity extends org.apache.spark.internal.Logging {
     * `assignments/`; `centroids/` (the cell geometry) is untouched. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       maxFilesPerCell: Int = 1): Int =
-    Dedup.withIndexLease(Dedup.indexFs(spark, path), path, "compactIvfIndex") {
+    EpochIndex.withLease(EpochIndex.fs(spark, path), path, "compactIvfIndex") {
       compactPartitionedTable(spark, s"$path/assignments", "cell", maxFilesPerCell)
     }
 

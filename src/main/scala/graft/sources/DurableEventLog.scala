@@ -275,7 +275,7 @@ object DurableEventLog extends EventLogClient with Logging {
     require(target >= 0 && target < partitions,
       s"partition id $target out of range [0, $partitions)")
     val fs = fsFor(path)
-    graft.operators.Dedup.withIndexLease(fs, path, "durableSend") {
+    graft.storage.EpochIndex.withLease(fs, path, "durableSend") {
       val dir = new Path(path, s"segments/p=$target")
       fs.mkdirs(dir)
       val next = segmentsOf(fs, path, target).lastOption.map(segIdOf(_) + 1).getOrElse(0L)
@@ -377,7 +377,7 @@ object DurableEventLog extends EventLogClient with Logging {
   private[sources] def publishStaged(path: String, queryId: String, epochId: Long,
       taskDirsInOrder: Seq[String]): Long = {
     val fs = fsFor(path)
-    graft.operators.Dedup.withIndexLease(fs, path, "durablePublish") {
+    graft.storage.EpochIndex.withLease(fs, path, "durablePublish") {
       val epochDir = stagingDir(path, queryId, epochId)
       if (epochCommitted(path, queryId, epochId)) {
         fs.delete(epochDir, true)

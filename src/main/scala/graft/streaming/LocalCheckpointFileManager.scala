@@ -79,15 +79,12 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration)
                 StandardCopyOption.ATOMIC_MOVE,
                 StandardCopyOption.REPLACE_EXISTING)
             } else {
-              // On Linux, ATOMIC_MOVE without REPLACE_EXISTING still maps to
-              // rename(2), which silently replaces an existing destination —
-              // NIO only throws FileAlreadyExistsException on filesystems
-              // where the distinction is native. An existing target must
-              // surface as FileAlreadyExistsException (HDFSMetadataLog's
-              // concurrent-committer signal), so check explicitly first.
-              // Same benign TOCTOU window as Spark's rename-based manager.
-              if (Files.exists(dst.toPath)) throw new NioFileAlreadyExists(dst.toString)
-              Files.move(tmp.toPath, dst.toPath, StandardCopyOption.ATOMIC_MOVE)
+              // rename(2) silently replaces an existing destination, but
+              // link(2) fails with EEXIST atomically: an existing target
+              // surfaces as FileAlreadyExistsException (HDFSMetadataLog's
+              // concurrent-committer signal) with no check-then-act window.
+              Files.createLink(dst.toPath, tmp.toPath)
+              Files.delete(tmp.toPath)
             }
           } catch {
             case e: NioFileAlreadyExists =>

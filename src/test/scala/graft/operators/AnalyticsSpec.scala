@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.functions.TextFunctions
 import graft.functions.hashFunctions._
+import graft.storage.EpochIndex
 
 class TextFunctionsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -593,7 +594,7 @@ class DedupSpec extends AnyFunSuite {
     val attempt1 = probe(exclude = Some(7L))
     assert(attempt1 == Set(30L))
     // the crashed attempt admitted its survivors, then the epoch replays
-    Dedup.admitEpoch(batch.filter($"doc_id" === 30L), Seq($"text"), path, 7L)
+    EpochIndex.admit(path, 7L, Dedup.hashTables(batch.filter($"doc_id" === 30L), Seq($"text")))
     assert(probe(exclude = Some(7L)) == attempt1, "replay must be deterministic")
     // un-excluded probe shows what the exclusion prevents (self-collision)
     assert(probe(exclude = None).isEmpty)
@@ -626,7 +627,7 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val s2 = Dedup.dedupAgainstMinHashIndex(batch2, "doc_id", "text", path)
     assert(s2.select($"doc_id").as[Long].collect().toSet == Set(21L))
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("minhash index: streaming admission with replay-safe epoch exclusion") {
@@ -643,19 +644,75 @@ class DedupSpec extends AnyFunSuite {
     assert(attempt1 == Set(30L))
     // crashed attempt admitted its survivors into epoch 7, then replays:
     // the self-exclusion makes the retry recompute the identical set
-    Dedup.admitMinHashEpoch(batch.filter($"doc_id" === 30L), "doc_id", "text", path, 7L)
+    EpochIndex.admit(path, 7L,
+      Dedup.minHashTables(batch.filter($"doc_id" === 30L), "doc_id", "text", path))
     assert(probe(exclude = Some(7L)) == attempt1, "replay must be deterministic")
     // un-excluded probe self-collides; the next epoch sees the admission
     assert(probe(exclude = None).isEmpty)
     assert(probe(exclude = Some(8L)).isEmpty)
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
+  }
+
+  test("minhash index stream: cross-epoch admission equals per-epoch batch dedup") {
+    import graft.sources.{Event, EventLogRegistry}
+    val base = java.nio.file.Files.createTempDirectory("mh-idx-stream").toString
+    val (path, refPath) = (s"$base/idx", s"$base/ref")
+    Dedup.saveMinHashIndex(docs, "doc_id", "text", path)
+    Dedup.saveMinHashIndex(docs, "doc_id", "text", refPath)
+    val a = "a wholly original essay on distributed joins and partitioning schemes"
+    val b = "fresh unrelated commentary about watermarks and state stores in spark"
+    // two docs per epoch (one partition, maxEventsPerTrigger 2)
+    val epochs = Seq(
+      Seq(100L -> a, // novel: survives, admitted in epoch 0
+        101L -> "the quick brown fox jumps over the lazy dog again and again yesterday"),
+      Seq(102L -> a.replace("schemes", "strategies"), // paraphrase of 100: drops
+        103L -> b),
+      Seq(104L -> b.replace("spark", "flink"), // paraphrase of 103: drops
+        105L -> "an entirely different note on bloom filters and sketches for joins"))
+    EventLogRegistry.drop("mh_idx_stream")
+    val log = EventLogRegistry.create("mh_idx_stream", 1)
+    epochs.flatten.foreach { case (id, text) =>
+      log.append(0, Event(text.getBytes("UTF-8"), id,
+        properties = Map("doc_id" -> id.toString)))
+    }
+    val stream = spark.readStream.format(graft.GraftEventLog.Format)
+      .option("name", "mh_idx_stream").option("maxEventsPerTrigger", "2").load()
+      .select($"properties"("doc_id").cast("long").as("doc_id"),
+        $"body".cast("string").as("text"))
+    val survivors = scala.collection.mutable.Map.empty[Long, Set[Long]]
+    val q = Dedup.dedupStreamAgainstMinHashIndex(stream, "doc_id", "text", path) {
+      (df, epochId) =>
+        val ids = df.select($"doc_id").as[Long].collect().toSet
+        survivors.synchronized { survivors(epochId) = ids }
+    }.option("checkpointLocation", s"$base/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000), "stream did not finish")
+    finally q.stop()
+    assert(survivors.toMap == Map(0L -> Set(100L), 1L -> Set(103L), 2L -> Set(105L)),
+      survivors.toString)
+    // the same epochs through the batch API, admitting survivors in between
+    val reference = epochs.map { rows =>
+      val kept = Dedup.dedupAgainstMinHashIndex(rows.toDF("doc_id", "text"),
+        "doc_id", "text", refPath).cache()
+      val ids = kept.select($"doc_id").as[Long].collect().toSet
+      Dedup.appendToMinHashIndex(kept, "doc_id", "text", refPath)
+      kept.unpersist()
+      ids
+    }
+    assert(survivors.toSeq.sortBy(_._1).map(_._2) == reference)
+    val bandDirs = new java.io.File(s"$path/bands").listFiles().map(_.getName)
+      .filter(_.startsWith("epoch=")).toSet
+    assert(bandDirs == Set("epoch=-1", "epoch=0", "epoch=1", "epoch=2"), bandDirs.toString)
+    EventLogRegistry.drop("mh_idx_stream")
+    EpochIndex.forget(path); EpochIndex.forget(refPath)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("re-saving an index path drops stale epoch deltas (hash + minhash families)") {
     val path = java.nio.file.Files.createTempDirectory("hash-idx-resave").toString
     Dedup.saveHashIndex(docs, Seq($"text"), path)
     val stale = Seq((50L, "a stale streaming-run document")).toDF("doc_id", "text")
-    Dedup.admitEpoch(stale, Seq($"text"), path, 7L)
+    EpochIndex.admit(path, 7L, Dedup.hashTables(stale, Seq($"text")))
     // a FRESH save must not silently union the dead stream's delta
     Dedup.saveHashIndex(docs, Seq($"text"), path)
     val probe = Seq((60L, "a stale streaming-run document")).toDF("doc_id", "text")
@@ -667,7 +724,7 @@ class DedupSpec extends AnyFunSuite {
     // minhash family: same contract
     val p2 = java.nio.file.Files.createTempDirectory("mh-idx-resave").toString
     Dedup.saveMinHashIndex(docs, "doc_id", "text", p2)
-    Dedup.admitMinHashEpoch(stale, "doc_id", "text", p2, 3L)
+    EpochIndex.admit(p2, 3L, Dedup.minHashTables(stale, "doc_id", "text", p2))
     Dedup.saveMinHashIndex(docs, "doc_id", "text", p2)
     val fs = new org.apache.hadoop.fs.Path(p2)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -679,24 +736,67 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("hash index: epoch compaction merges deltas without changing probes") {
-    val path = java.nio.file.Files.createTempDirectory("hash-idx-compact").toString
-    Dedup.saveHashIndex(docs, Seq($"text"), path)
+  test("epoch compaction merges deltas without changing probes (all 4 families)") {
+    def media(id: Long, body: String) =
+      Multimodal.MediaRow(id, body.getBytes("UTF-8"), "image", "s")
     val extra = Seq((50L, "an epoch-admitted document for compaction")).toDF("doc_id", "text")
-    Dedup.admitEpoch(extra, Seq($"text"), path, 5L)
-    Dedup.admitEpoch(extra, Seq($"text"), path, 6L) // duplicate across epochs
     val probe = Seq(
       (60L, "an epoch-admitted document for compaction"),  // must drop
       (61L, "never seen anywhere")).toDF("doc_id", "text") // must survive
-    def survivors() = Dedup.dedupAgainstHashIndex(probe, Seq($"text"), path)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(survivors() == Set(61L))
-    assert(Dedup.compactHashIndex(spark, path) == 3)
-    assert(survivors() == Set(61L), "compaction must not change probe results")
-    assert(Dedup.compactHashIndex(spark, path) == 0)
-    // cross-epoch duplicate hashes collapsed to one row
-    val rows = Dedup.loadHashIndex(spark, path)
-    assert(rows.count() == rows.dropDuplicates("h0", "h1").count())
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c)).as[Long].collect().toSet
+    // (family, save, admit into an epoch, probe answer, expected answer, compact)
+    val families = Seq[(String, String => Unit, (String, Long) => Unit,
+        String => Set[Long], Set[Long], String => Int)](
+      ("hash",
+        Dedup.saveHashIndex(docs, Seq($"text"), _),
+        (p, e) => EpochIndex.admit(p, e, Dedup.hashTables(extra, Seq($"text"))),
+        p => ids(Dedup.dedupAgainstHashIndex(probe, Seq($"text"), p), "doc_id"),
+        Set(61L), Dedup.compactHashIndex(spark, _)),
+      ("minhash",
+        Dedup.saveMinHashIndex(docs, "doc_id", "text", _),
+        (p, e) => EpochIndex.admit(p, e, Dedup.minHashTables(extra, "doc_id", "text", p)),
+        p => ids(Dedup.dedupAgainstMinHashIndex(probe, "doc_id", "text", p), "doc_id"),
+        Set(61L), Dedup.compactMinHashIndex(spark, _)),
+      ("phash",
+        Multimodal.savePhashIndex(
+          Seq(media(1L, "seed payload content here " * 10)).toDS(), _),
+        (p, e) => EpochIndex.admit(p, e, Multimodal.phashTables(
+          Seq(media(2L, "brand new doc one " * 15)).toDS())),
+        p => ids(Multimodal.dedupAgainstPhashIndex(Seq(
+          media(4L, "brand new doc one " * 15), // must drop
+          media(5L, "zz 0123 completely different shape! " * 11)).toDS(), p).toDF(),
+          "media_id"),
+        Set(5L), Multimodal.compactPhashIndex(spark, _)),
+      ("fuzzy",
+        Fuzzy.saveFuzzyIndex(Seq(1L -> "kitten").toDF("id", "key"), "id", "key", 1, _),
+        (p, e) => Fuzzy.withIndexTables(Seq(4L -> "mitten").toDF("id", "key"), "id", "key",
+          p)(EpochIndex.admit(p, e, _)),
+        { p =>
+          val f = Fuzzy.loadFuzzyIndex(spark, p)
+          // matched catalog ids: sitten~kitten, miitten~mitten (admitted)
+          try Fuzzy.fuzzyJoinWith(f, Seq(10L -> "sitten", 11L -> "miitten")
+            .toDF("id", "key"), "id", "key").as[(Long, Long, Int)].collect().map(_._1).toSet
+          finally f.release()
+        },
+        Set(1L, 4L), Fuzzy.compactFuzzyIndex(spark, _)))
+    families.foreach { case (family, save, admit, answer, expected, compact) =>
+      val path = java.nio.file.Files.createTempDirectory(s"$family-idx-compact").toString
+      save(path)
+      admit(path, 5L)
+      admit(path, 6L) // duplicate across epochs
+      assert(answer(path) == expected, family)
+      assert(compact(path) == 3, family)
+      assert(answer(path) == expected, s"$family: compaction must not change probe results")
+      assert(compact(path) == 0, s"$family: already compact")
+      if (family == "hash") {
+        // cross-epoch duplicate hashes collapsed to one row
+        val rows = Dedup.loadHashIndex(spark, path)
+        assert(rows.count() == rows.dropDuplicates("h0", "h1").count())
+      }
+      EpochIndex.forget(path)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    }
   }
 
   test("index writer lease: a second concurrent writer fails loudly; stale lease is broken") {
@@ -730,11 +830,11 @@ class DedupSpec extends AnyFunSuite {
     // broken automatically instead of bricking the index
     val out2 = fs.create(lease, false)
     out2.write("deadWriter@crash".getBytes("UTF-8")); out2.close()
-    val old = System.currentTimeMillis() - Dedup.IndexLeaseStaleMs - 60000
+    val old = System.currentTimeMillis() - EpochIndex.LeaseStaleMs - 60000
     fs.setTimes(lease, old, old)
     assert(Dedup.compactHashIndex(spark, path) >= 0) // acquires by breaking
     assert(!fs.exists(lease))
-    Dedup.forgetHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("index lease heartbeat: a body outliving the stale window keeps its lease") {
@@ -751,16 +851,16 @@ class DedupSpec extends AnyFunSuite {
     // test host the beat thread can be scheduler-starved for hundreds of
     // ms — the window must dwarf plausible starvation or the test flakes
     // on exactly the contention it is supposed to survive
-    Dedup.withIndexLease(fs, path, "slowCompaction", staleMs = 2000L) {
+    EpochIndex.withLease(fs, path, "slowCompaction", staleMs = 2000L) {
       Thread.sleep(6000L) // 3x the stale window
       val e = intercept[IllegalStateException](
-        Dedup.withIndexLease(fs, path, "thief", staleMs = 2000L) {
+        EpochIndex.withLease(fs, path, "thief", staleMs = 2000L) {
           fail("a live heartbeating lease was stolen")
         })
       assert(e.getMessage.contains("slowCompaction"), e.getMessage)
     }
     // released: the next writer acquires immediately
-    Dedup.withIndexLease(fs, path, "next") { () }
+    EpochIndex.withLease(fs, path, "next") { () }
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/__lease")))
   }
 
@@ -777,7 +877,7 @@ class DedupSpec extends AnyFunSuite {
     spark.conf.set(Dedup.MinHashBatchGuardConfKey, "0")
     try assert(Dedup.minHashIndexMatches(docs, "doc_id", "text", path).columns.length == 3)
     finally spark.conf.unset(Dedup.MinHashBatchGuardConfKey)
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("minhash index probe agrees with decontaminateNearDup on the same params") {
@@ -799,7 +899,7 @@ class DedupSpec extends AnyFunSuite {
     assert(viaIndex == viaLive,
       s"index-only=${viaIndex -- viaLive} live-only=${viaLive -- viaIndex}")
     assert(viaIndex.nonEmpty, "paraphrases must be caught at all")
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("minhash index: drift detection and epoch compaction") {
@@ -815,7 +915,8 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("stale"))
     // streaming epochs accrete partitions; compaction merges them into -1
     // without changing a single probe result
-    Dedup.admitMinHashEpoch(grown.filter($"doc_id" === 99L), "doc_id", "text", path, 3L)
+    EpochIndex.admit(path, 3L,
+      Dedup.minHashTables(grown.filter($"doc_id" === 99L), "doc_id", "text", path))
     val probe = Seq((200L, "a very new document beyond what the index has ever covered"))
       .toDF("doc_id", "text")
     def survivors() = Dedup.dedupAgainstMinHashIndex(probe, "doc_id", "text", path)
@@ -825,7 +926,7 @@ class DedupSpec extends AnyFunSuite {
     assert(survivors().isEmpty, "compaction must not change probe results")
     assert(Dedup.compactMinHashIndex(spark, path) == 0, "already compact")
     Dedup.validateMinHashIndex(grown, "doc_id", "text", path) // now current
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("minhash compaction dedups double-admitted docs and survives a crashed swap") {
@@ -835,8 +936,8 @@ class DedupSpec extends AnyFunSuite {
     // stream re-admitted): compaction must keep ONE row per doc, not
     // inflate match counts forever
     val again = docs.filter($"doc_id" === 1L)
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 7L)
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 8L)
+    EpochIndex.admit(path, 7L, Dedup.minHashTables(again, "doc_id", "text", path))
+    EpochIndex.admit(path, 8L, Dedup.minHashTables(again, "doc_id", "text", path))
     assert(Dedup.compactMinHashIndex(spark, path) == 3)
     val nDocRows = spark.read.parquet(s"$path/shingles")
       .filter($"doc_id" === 1L).count()
@@ -848,7 +949,7 @@ class DedupSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
     assert(fs.rename(p("shingles"), p("shingles__precompact")))
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 9L) // recreates dir
+    EpochIndex.admit(path, 9L, Dedup.minHashTables(again, "doc_id", "text", path)) // recreates dir
     fs.delete(p("shingles/epoch=9"), true); fs.delete(p("shingles"), true)
     assert(Dedup.compactMinHashIndex(spark, path) >= 1)
     assert(spark.read.parquet(s"$path/shingles").filter($"doc_id" === 1L).count() == 1,
@@ -856,13 +957,13 @@ class DedupSpec extends AnyFunSuite {
     // the narrower crash window: swap-out done AND the empty live shell
     // recreated by mkdirs, but the compacted data never renamed in. The
     // empty shell must NOT be mistaken for a completed swap.
-    Dedup.admitMinHashEpoch(again, "doc_id", "text", path, 10L)
+    EpochIndex.admit(path, 10L, Dedup.minHashTables(again, "doc_id", "text", path))
     assert(fs.rename(p("shingles"), p("shingles__precompact")))
     assert(fs.mkdirs(p("shingles")))
     assert(Dedup.compactMinHashIndex(spark, path) >= 1)
     assert(spark.read.parquet(s"$path/shingles").filter($"doc_id" === 1L).count() == 1,
       "empty mkdirs shell was mistaken for a completed swap — index lost")
-    Dedup.forgetMinHashIndex(path)
+    EpochIndex.forget(path)
   }
 
   test("dedupParagraphsWithinDoc keeps first occurrences, zero shuffle") {
@@ -2035,9 +2136,9 @@ class MultimodalSpec extends AnyFunSuite {
       ("totally new payload " * 20).getBytes("UTF-8"), "image", "srcX")).toDS()
     assert(Multimodal.dedupAgainstPhashIndex(fresh, path).count() == 1)
     // epoch admission replay: overwrite semantics — probe after 1 == after 2
-    Multimodal.admitPhashEpoch(fresh, path, 7L)
+    EpochIndex.admit(path, 7L, Multimodal.phashTables(fresh))
     assert(Multimodal.dedupAgainstPhashIndex(fresh, path).count() == 0)
-    Multimodal.admitPhashEpoch(fresh, path, 7L)
+    EpochIndex.admit(path, 7L, Multimodal.phashTables(fresh))
     val m = Multimodal.phashIndexMatches(fresh, path).collect()
     assert(m.length == 1 && m(0).getLong(1) == 1L,
       s"replayed admission duplicated index rows: ${m.toSeq}")
@@ -2057,7 +2158,7 @@ class MultimodalSpec extends AnyFunSuite {
     intercept[IllegalStateException](Multimodal.appendToPhashIndex(fresh, path))
     fs.delete(lease, false)
     media.unpersist()
-    Multimodal.forgetPhashIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -2069,14 +2170,14 @@ class MultimodalSpec extends AnyFunSuite {
       body.getBytes("UTF-8"), "image", "s")
     val seed = Seq(row(1L, "seed payload content here " * 10)).toDS()
     Multimodal.savePhashIndex(seed, path)
-    Multimodal.admitPhashEpoch(
-      Seq(row(2L, "stale streamed payload " * 12)).toDS(), path, 7L)
+    EpochIndex.admit(path, 7L,
+      Multimodal.phashTables(Seq(row(2L, "stale streamed payload " * 12)).toDS()))
     // fresh save: the dead stream's epoch=7 delta must NOT survive
     Multimodal.savePhashIndex(seed, path)
     val probe = Seq(row(10L, "stale streamed payload " * 12)).toDS()
     assert(Multimodal.phashIndexMatches(probe, path).collect().isEmpty,
       "stale epoch delta survived a fresh savePhashIndex")
-    Multimodal.forgetPhashIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -2109,7 +2210,7 @@ class MultimodalSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
     assert(got.toSet == Set(3L, 5L), s"got ${got.toSet}")
-    Multimodal.forgetPhashIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

@@ -5,6 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
+import graft.storage.EpochIndex
+
 class FuzzySpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
   import spark.implicits._
@@ -216,7 +218,7 @@ class FuzzySpec extends AnyFunSuite {
     }
     assert(bag.size == bag.distinct.size && bag.toSet == live,
       s"double append duplicated pairs: $bag")
-    Fuzzy.forgetFuzzyIndex(p1); Fuzzy.forgetFuzzyIndex(p2)
+    EpochIndex.forget(p1); EpochIndex.forget(p2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -225,8 +227,8 @@ class FuzzySpec extends AnyFunSuite {
     val path = s"$base/idx"
     Fuzzy.saveFuzzyIndex(Seq(1L -> "kitten").toDF("id", "key"), "id", "key",
       maxDist = 1, path)
-    Fuzzy.admitFuzzyEpoch(Seq(2L -> "mitten").toDF("id", "key"), "id", "key",
-      path, 7L)
+    Fuzzy.withIndexTables(Seq(2L -> "mitten").toDF("id", "key"), "id", "key",
+      path)(EpochIndex.admit(path, 7L, _))
     // fresh save: the dead stream's epoch=7 delta must NOT survive
     Fuzzy.saveFuzzyIndex(Seq(1L -> "kitten").toDF("id", "key"), "id", "key",
       maxDist = 1, path)
@@ -236,7 +238,7 @@ class FuzzySpec extends AnyFunSuite {
         "id", "key").as[(Long, Long, Int)].collect().toSet
       finally fitted.release()
     assert(hits.isEmpty, s"stale delta survived a fresh saveFuzzyIndex: $hits")
-    Fuzzy.forgetFuzzyIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -249,10 +251,10 @@ class FuzzySpec extends AnyFunSuite {
     // epoch 7 admits a delta; a crashed attempt's replay OVERWRITES it —
     // probing after 1 admission == after 2 (no duplicate index rows)
     val delta = Seq(4L -> "mitten")
-    Fuzzy.admitFuzzyEpoch(delta.toDF("id", "key"), "id", "key", path, 7L)
+    Fuzzy.withIndexTables(delta.toDF("id", "key"), "id", "key", path)(EpochIndex.admit(path, 7L, _))
     val after1 = probeIdx(path, probe)
     assert(after1.map(_._1) == Set(1L, 4L))
-    Fuzzy.admitFuzzyEpoch(delta.toDF("id", "key"), "id", "key", path, 7L)
+    Fuzzy.withIndexTables(delta.toDF("id", "key"), "id", "key", path)(EpochIndex.admit(path, 7L, _))
     val fitted = Fuzzy.loadFuzzyIndex(spark, path)
     val bag =
       try Fuzzy.fuzzyJoinWith(fitted, probe.toDF("id", "key"), "id", "key")
@@ -265,7 +267,7 @@ class FuzzySpec extends AnyFunSuite {
     assert(Fuzzy.compactFuzzyIndex(spark, path) == 2)
     assert(probeIdx(path, probe) == after1)
     assert(Fuzzy.compactFuzzyIndex(spark, path) == 0)
-    Fuzzy.forgetFuzzyIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -287,13 +289,13 @@ class FuzzySpec extends AnyFunSuite {
     // the failed writer must not have mutated the index
     assert(probeIdx(path, Seq(10L -> "miitten")).isEmpty)
     // a dead writer's stale lease is broken automatically
-    val old = System.currentTimeMillis() - Dedup.IndexLeaseStaleMs - 60000
+    val old = System.currentTimeMillis() - EpochIndex.LeaseStaleMs - 60000
     fs.setTimes(lease, old, old)
     Fuzzy.appendToFuzzyIndex(Seq(2L -> "mitten").toDF("id", "key"),
       "id", "key", path)
     assert(probeIdx(path, Seq(10L -> "miitten")) == Set((2L, 10L, 1)))
     assert(!fs.exists(lease), "winner must release the lease")
-    Fuzzy.forgetFuzzyIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 
@@ -323,7 +325,7 @@ class FuzzySpec extends AnyFunSuite {
         "id", "key", "id", "key", maxDist = 1)
       .as[(Long, Long, Int)].collect().toSet
     assert(got.toSet == batch, s"stream ${got.toSet} != batch $batch")
-    Fuzzy.forgetFuzzyIndex(path)
+    EpochIndex.forget(path)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

@@ -66,6 +66,40 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
+  test("two racing committers (overwrite=false): exactly one wins, the loser " +
+    "gets FileAlreadyExistsException") {
+    withManager { (m, dir) =>
+      // both temp files are complete before either commits; the commits
+      // start together so the exists/rename window would be hit if present
+      (0 until 50).foreach { round =>
+        val p = new Path(s"${dir.getAbsolutePath}/$round")
+        val outs = Seq("a", "b").map { who =>
+          val out = m.createAtomic(p, overwriteIfPossible = false)
+          out.write(s"$who-$round".getBytes(UTF_8))
+          who -> out
+        }
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val commits = outs.map { case (who, out) =>
+          val f = new java.util.concurrent.FutureTask[Option[Throwable]](() => {
+            start.await()
+            try { out.close(); None } catch { case e: Throwable => Some(e) }
+          })
+          new Thread(f).start()
+          who -> f
+        }
+        start.countDown()
+        val results = commits.map { case (who, f) => who -> f.get() }
+        val winners = results.collect { case (who, None) => who }
+        assert(winners.size == 1, s"round $round: winners $winners")
+        val losses = results.flatMap(_._2)
+        assert(losses.size == 1 && losses.head.isInstanceOf[FileAlreadyExistsException],
+          s"round $round: $losses")
+        assert(read(m, p) == s"${winners.head}-$round", "file must hold the winner's bytes")
+      }
+      assert(dir.listFiles().forall(!_.getName.startsWith(".")), "temp files left behind")
+    }
+  }
+
   test("createAtomic(overwrite=true) replaces an existing target") {
     withManager { (m, dir) =>
       val p = new Path(s"${dir.getAbsolutePath}/0")

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.sources.{Event, EventLogRegistry}
+import graft.storage.EpochIndex
 
 class StreamOpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -883,7 +884,7 @@ class StreamOpsSpec extends AnyFunSuite {
           .cast("double").as("n_tok")), 0L)
     assert(tracker.counts == fresh.counts,
       "replayed epoch double-merged into the drift tracker")
-    Dedup.forgetHashIndex(idxPath)
+    EpochIndex.forget(idxPath)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     ()
   }
