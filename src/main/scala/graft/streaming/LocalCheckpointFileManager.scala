@@ -26,9 +26,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
  *
  * Semantics match Spark's rename-based managers:
  *  - `createAtomic` writes to a hidden temp file in the target directory
- *    and renames it into place on `close()`; with `overwriteIfPossible =
- *    false` an existing target raises `FileAlreadyExistsException`, which
- *    `HDFSMetadataLog` uses to detect a concurrent committer.
+ *    and moves it into place on `close()`; with `overwriteIfPossible =
+ *    false` it hard-links it instead, so an existing target raises
+ *    `FileAlreadyExistsException`, which `HDFSMetadataLog` uses to detect a
+ *    concurrent committer.
  *  - `delete` is recursive and silent on missing paths; `list` on a missing
  *    path raises `FileNotFoundException` (callers distinguish the two).
  *
